@@ -19,31 +19,6 @@ from hive_scripts_spark.plans.registry import register, table
 # ---------------------------------------------------------------------------
 
 
-def g_rollup_pricing(spark, sf_dir):
-    """[retired from the graded registry in the r17 capacity swap —
-    slot funds ``x_kmv_grouped``; ROLLUP is grouping-sets sugar over
-    the same Expand operator, so the family stays graded by the richer
-    ``g_grouping_sets``, and this row stays value-pinned against its
-    frozen r14 oracle in ``tests/test_retired_queries.py``]"""
-    li = table(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.count(F.lit(1)).alias("n_items"),
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
-    )
-
-
-def g_cube_order_status(spark, sf_dir):
-    """[retired from the graded registry in the r17 capacity swap —
-    slot funds ``x_kmv_distinct``; CUBE is grouping-sets sugar over
-    the same Expand operator, so the family stays graded by the richer
-    ``g_grouping_sets``, and this row stays value-pinned against its
-    frozen r14 oracle in ``tests/test_retired_queries.py``]"""
-    orders = table(spark, sf_dir, "orders")
-    return orders.cube("o_orderstatus", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders")
-    )
-
-
 @register(
     "g_grouping_sets",
     oracle="""

@@ -252,37 +252,15 @@ def a4_deterministic_sample(spark, sf_dir):
     )
 
 
-def a4_limit_sample(spark, sf_dir):
-    """Deterministic head-N sample (`sort | head` semantics).
-
-    Retired from the graded registry in r9 (one-in-one-out capacity
-    swap, COVERAGE.md "Registry capacity"): the A4 sampling family
-    stays graded via `a4_deterministic_sample` + `a4_stratified_sample`
-    and this limit form keeps its value check in
-    `tests/test_retired_queries.py` against the same DuckDB oracle the
-    driver used through r8."""
-    orders = table(spark, sf_dir, "orders")
-    return (
-        orders.orderBy("o_orderkey")
-        .limit(10)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-    )
-
-
 # ---------------------------------------------------------------------------
 # P2 — project-all (SELECT * — the UC#2 sample-export projection)
 # ---------------------------------------------------------------------------
 
 
+@register("p2_project_all", oracle="select * from nation")
 def p2_project_all(spark, sf_dir):
     """P2 project-all (SELECT * — verizon_automation_script.sh export
-    projection).
-
-    Retired from the graded registry in r9 (one-in-one-out capacity
-    swap): project-all is implicitly re-proven by every full-row graded
-    query (e.g. `x_pii_redact` grades an entire text column), and this
-    exact form keeps its value check in
-    `tests/test_retired_queries.py`."""
+    projection)."""
     return table(spark, sf_dir, "nation").select("*")
 
 
@@ -510,47 +488,3 @@ def j_anti_customers_no_pending(spark, sf_dir):
     return cust.join(
         pending, cust.c_custkey == pending.o_custkey, "left_anti"
     ).select("c_custkey", "c_name")
-
-
-def j_semi_nations_with_suppliers(spark, sf_dir):
-    """[retired from the graded registry in the r15 capacity swap —
-    slot funds ``x_text_bigram_logprob``; a minimal left-semi
-    demonstration whose family stays graded by the reference-derived
-    ``j1_reconcile_matched`` row, value-pinned against its frozen r12
-    oracle in ``tests/test_retired_queries.py``]"""
-    nation = table(spark, sf_dir, "nation")
-    supp = table(spark, sf_dir, "supplier")
-    return nation.join(
-        supp, nation.n_nationkey == supp.s_nationkey, "left_semi"
-    ).select("n_nationkey", "n_name")
-
-
-def a4_stratified_sample(spark, sf_dir):
-    """[retired from the graded registry in the r14 capacity swap —
-    slot funds ``x_events_sessionize_chunked``; the A4 sampling family
-    stays graded by ``a4_deterministic_sample`` and this exact
-    per-stratum composition stays value-pinned against its frozen r11
-    oracle in ``tests/test_retired_queries.py``]
-
-    Deterministic stratified sampling: per-stratum fractions (the
-    ``df.sampleBy`` intent, made engine-reproducible).
-
-    Same hash-mod machinery as ``deterministic_sample`` but the bucket
-    threshold varies per stratum — here 20% of BUILDING customers, 10%
-    of every other segment. Still a pure narrow filter: no shuffle, no
-    rand(), the same logical rows selected on any engine or run.
-    """
-    from hive_scripts_spark.functions.canonical import FIELD_SEP
-
-    cust = table(spark, sf_dir, "customer")
-    key = F.concat_ws(FIELD_SEP, F.col("c_custkey").cast("string"))
-    bucket = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("bigint") % 1000
-    threshold = F.when(F.col("c_mktsegment") == "BUILDING", 200).otherwise(100)
-    return (
-        cust.where(bucket < threshold)
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_sampled"),
-            F.count_distinct("c_custkey").alias("n_customers"),
-        )
-    )

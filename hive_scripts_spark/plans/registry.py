@@ -77,43 +77,12 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# The external correctness gate grades only the FIRST 50 registry
-# entries in insertion order, so registration order IS the grading
-# window. Through r7 the window was a hand-maintained FRONT_ORDER list
-# here (rotation history r1-r7 lives in git at this file's r7 blob);
-# hand-editing is how 34 oracled queries drifted two-plus rounds past
-# their last green row. Since r8 the window is GENERATED from the
-# committed CORRECTNESS_r*.json artifacts by
-# :mod:`hive_scripts_spark.plans.rotation`:
-# never-graded first (new ops get first rows immediately), then stale
-# (oldest green first), then freshness re-grades to fill 50 slots.
-# The staleness guard in tests/test_entry.py recomputes the same
-# history independently, so it is green by construction.
-FRONT_ORDER: list[str] = []
-
-
 def _load_all() -> None:
-    # populate the registry (import side effects)
+    # populate the registry (import side effects); registry order is
+    # import order
     from hive_scripts_spark.plans import analytics_queries  # noqa: F401
     from hive_scripts_spark.plans import extension_queries  # noqa: F401
     from hive_scripts_spark.plans import reference_queries  # noqa: F401
-
-    from hive_scripts_spark.plans import rotation
-
-    last_green, latest = rotation.load_green_history(rotation.repo_root())
-    # only oracled queries compete for window slots: the 6 permanent
-    # no-oracle rows (xxhash64 families + HLL) each have a value-graded
-    # portable twin, so a rows-only slot would waste grading capacity.
-    FRONT_ORDER[:] = rotation.compute_front_order(
-        [n for n in QUERIES if n in ORACLES], last_green, latest,
-        strict=False,  # overflow fails loudly in tests/tools, not here
-    )
-    front = set(FRONT_ORDER)
-    ordered = FRONT_ORDER + [n for n in QUERIES if n not in front]
-    for d in (QUERIES, ORACLES):
-        reordered = {n: d[n] for n in ordered if n in d}
-        d.clear()
-        d.update(reordered)
 
 
 _load_all()

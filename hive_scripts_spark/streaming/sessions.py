@@ -17,9 +17,7 @@ strictly-greater-than-gap rule exactly. The two operators therefore
 agree on session membership; they differ only in output shape
 (``session_window`` closes at last-event + gap). The batch twin of
 this operator is :func:`session_window_counts` on a batch frame — the
-stream/batch parity test asserts exact equality, and the registry's
-``x_events_session_window`` query oracles the batch form against
-DuckDB.
+stream/batch parity test asserts exact equality.
 """
 
 from __future__ import annotations

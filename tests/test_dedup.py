@@ -942,3 +942,100 @@ def test_minhash_index_interoperates_with_inline_chain(spark, tmp_path):
         ).collect()
     }
     assert inline == derived
+
+
+#: engine-faithful shingle sets (word 3-grams over the normalized token
+#: stream, distinct, sorted for set comparison) for the planted pins
+_PLANTED_SETS = r"""
+    with toks as (
+      select doc_id,
+             string_split(trim(regexp_replace(regexp_replace(
+               text, chr(13), '', 'g'), '\s+', ' ', 'g')), ' ') as ws
+      from documents
+    ), sets as (
+      select doc_id, list_sort(list_distinct([
+               ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
+               for i in range(1, greatest(len(ws) - 1, 1))
+             ])) as sh
+      from toks where len(ws) >= 3
+    )
+"""
+
+
+@pytest.mark.parametrize(
+    "sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+)
+def test_minhash_planted_margins(sf_dir):
+    """The data properties the x_dedup_minhash_planted /
+    x_dedup_components_planted closed forms lean on, with margin: no
+    two distinct docs share an identical shingle set (else their
+    cross-copy pairs would join the output), and the max
+    non-identical-set pair Jaccard stays below 0.991 (threshold 0.995
+    minus margin), so natural near-dups always die at exact verify."""
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "create view documents as select * from "
+            f"'{sf_dir}/documents.parquet'"
+        )
+        identical_groups = con.sql(
+            f"""{_PLANTED_SETS}
+            select count(*) from (
+              select sh from sets group by sh having count(*) > 1)
+            """
+        ).fetchone()[0]
+        assert identical_groups == 0
+        max_natural = con.sql(
+            f"""{_PLANTED_SETS}
+            select max(len(list_intersect(a.sh, b.sh)) * 1.0
+                       / len(list_distinct(list_concat(a.sh, b.sh))))
+            from sets a join sets b
+              on a.doc_id < b.doc_id and a.sh <> b.sh
+            """
+        ).fetchone()[0]
+        assert max_natural < 0.991, f"max natural jaccard: {max_natural}"
+    finally:
+        con.close()
+
+
+def test_minhash_planted_arms_fire(spark):
+    """x_dedup_minhash_planted at sf0.01: one twin pair per eligible doc
+    at exactly 1.0, and the verify-kill arm runs — a loose 0.5
+    threshold on the same corpus surfaces strictly more pairs (the
+    natural near-dups the 0.995 run verified away)."""
+    from hive_scripts_spark.plans.extension_queries import twin_copies
+    from hive_scripts_spark.plans.registry import QUERIES, table
+
+    sf_dir = "/root/testdata/sf0.01"
+    rows = QUERIES["x_dedup_minhash_planted"](spark, sf_dir).collect()
+    got = {(r["a_id"], r["b_id"]): r["jaccard"] for r in rows}
+    assert len(got) > 0
+    assert all(v == 1.0 for v in got.values())
+    assert all(b == a + 1 and a % 2 == 0 for a, b in got)
+    copies = twin_copies(table(spark, sf_dir, "documents"), 2)
+    n_loose = D.minhash_lsh_pairs(
+        copies,
+        threshold=0.5,
+        parallelism=spark.sparkContext.defaultParallelism,
+    ).count()
+    assert n_loose > len(got), (n_loose, len(got))
+
+
+def test_components_planted_arms_fire(spark):
+    """x_dedup_components_planted at sf0.01: every eligible doc yields
+    exactly one 3-member component labeled by its lowest copy id — the
+    propagation really merged the three pairwise twin edges."""
+    from collections import Counter
+
+    from hive_scripts_spark.plans.registry import QUERIES
+
+    rows = QUERIES["x_dedup_components_planted"](
+        spark, "/root/testdata/sf0.01"
+    ).collect()
+    assert len(rows) > 0
+    by_comp = Counter(r["component"] for r in rows)
+    assert all(c == 3 for c in by_comp.values())
+    assert all(r["component"] % 3 == 0 for r in rows)
+    assert all(r["node"] - r["component"] in (0, 1, 2) for r in rows)

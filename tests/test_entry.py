@@ -28,65 +28,55 @@ def test_oracle_keys_subset_of_queries():
     assert all(k.startswith(("x_", "g_")) for k in unoracled), unoracled
 
 
-def test_front_order_window_invariants():
-    """The driver grades the FIRST 50 registry entries; a malformed
-    rotation list would silently shrink or corrupt the graded window."""
-    from hive_scripts_spark.plans.registry import FRONT_ORDER, ORACLES, QUERIES
-
-    assert len(FRONT_ORDER) == 50
-    assert len(FRONT_ORDER) == len(set(FRONT_ORDER)), "duplicate window entries"
-    missing = [n for n in FRONT_ORDER if n not in QUERIES]
-    assert not missing, f"window names not registered: {missing}"
-    assert list(QUERIES)[:50] == FRONT_ORDER, "window not at registry front"
-    # every windowed query is oracled unless documented rows-only
-    rows_only = {n for n in FRONT_ORDER if n not in ORACLES}
-    assert not rows_only, f"unoracled queries in the graded window: {rows_only}"
-
-
-def test_no_oracled_query_stales_outside_the_window():
-    """Staleness guard (VERDICT r6 item 7): the driver grades 50 of 129
-    registry entries per round, so a query can silently drift N rounds
-    away from its last green row while the code under it churns — that
-    is how x_embed_normalize reached r7 with an r1-only green. Invariant
-    pinned here: every oracled query is either (a) green in one of the
-    two most recent CORRECTNESS artifacts, or (b) scheduled in the
-    CURRENT window (FRONT_ORDER), i.e. its next row arrives this round.
-    A failure names the queries two churn-rounds from their last grade
-    that the current rotation forgot."""
+def _registry_order(root):
+    """``list(QUERIES)`` as imported, in a fresh interpreter, from the
+    package copy under ``root``."""
     import json
-    import re
+    import subprocess
+    import sys
+
+    code = (
+        "import json, sys; sys.path.insert(0, sys.argv[1]); "
+        "from hive_scripts_spark.plans.registry import QUERIES; "
+        "print(json.dumps(list(QUERIES)))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code, str(root)],
+        cwd=root,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    return json.loads(out.stdout.splitlines()[-1])
+
+
+def test_registry_order_ignores_files_beside_the_package(tmp_path):
+    """Registry order is import order: a grading artifact planted next
+    to the package (here one that would mark every oracled query fresh
+    but the last) must not reorder ``QUERIES``."""
+    import json
+    import shutil
     from pathlib import Path
 
-    from hive_scripts_spark.plans.registry import FRONT_ORDER, ORACLES
+    from hive_scripts_spark.plans.registry import ORACLES
 
-    root = Path(__file__).resolve().parents[1]
-    artifacts = sorted(root.glob("CORRECTNESS_r*.json"))
-    if len(artifacts) < 2:
-        return  # not enough history to judge staleness
-    latest_round = max(
-        int(re.search(r"r(\d+)", p.stem).group(1)) for p in artifacts
+    pkg = Path(__file__).resolve().parents[1] / "hive_scripts_spark"
+    roots = []
+    for sub in ("plain", "planted"):
+        root = tmp_path / sub
+        shutil.copytree(
+            pkg,
+            root / "hive_scripts_spark",
+            ignore=shutil.ignore_patterns("__pycache__"),
+        )
+        roots.append(root)
+    green = {"rows_match": True, "schema_match": True, "hash_match": True}
+    (roots[1] / "CORRECTNESS_r99.json").write_text(
+        json.dumps({n: green for n in list(ORACLES)[:-1]})
     )
-    last_green: dict[str, int] = {}
-    for p in artifacts:
-        rnd = int(re.search(r"r(\d+)", p.stem).group(1))
-        for name, row in json.load(open(p)).items():
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            ):
-                last_green[name] = max(last_green.get(name, 0), rnd)
-
-    window = set(FRONT_ORDER)
-    stale = sorted(
-        name
-        for name in ORACLES
-        if last_green.get(name, 0) < latest_round - 1 and name not in window
-    )
-    assert not stale, (
-        f"oracled queries with no green row since r{latest_round - 1} "
-        f"and no slot in the current window: {stale}"
-    )
+    plain = _registry_order(roots[0])
+    assert _registry_order(roots[1]) == plain
+    assert set(plain) == set(entry_mod.queries())
 
 
 def test_no_query_emits_nested_output_types(spark):

@@ -523,3 +523,22 @@ def test_scd2_single_exchange_plan(spark):
         (1, "a3", 9, None),
         (2, "b", 0, None),
     ]
+
+
+def test_registered_merge_upsert_changes_fire(spark):
+    """x_merge_upsert's branches execute at sf0.01: tombstones are the
+    only thing that shrinks the row count, and re-priced rows exist."""
+    from hive_scripts_spark.plans.registry import QUERIES, table
+
+    sf_dir = "/root/testdata/sf0.01"
+    merged = QUERIES["x_merge_upsert"](spark, sf_dir)
+    orders = table(spark, sf_dir, "orders")
+    n_orders = orders.count()
+    n_tombstoned = orders.where(
+        (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") % 3 == 0)
+    ).count()
+    n_repriced = orders.where(
+        (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") % 3 != 0)
+    ).count()
+    assert n_tombstoned > 0 and n_repriced > 0
+    assert merged.count() == n_orders - n_tombstoned

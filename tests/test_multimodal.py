@@ -2145,3 +2145,62 @@ def test_all_codec_paths_survive_byte_flip_fuzz(spark):
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     assert M.resize_images(df, target=(4, 4), fake=False).count() == len(rows)
     M.extract_frames(df, every_n=1).count()  # must not raise
+
+
+def test_frame_md5_literals():
+    """The x_multimodal_frames oracle's md5 literals are exactly the md5
+    of the registered JPEG plan literals — re-derived so an edit to
+    either side fails."""
+    import hashlib
+
+    from hive_scripts_spark.plans.extension_queries import (
+        _JPEG_GRAY_HEX,
+        _JPEG_GRAY_MD5,
+    )
+
+    assert set(_JPEG_GRAY_MD5) == set(_JPEG_GRAY_HEX)
+    for g, want in _JPEG_GRAY_MD5.items():
+        assert hashlib.md5(bytes.fromhex(_JPEG_GRAY_HEX[g])).hexdigest() == want
+
+
+def test_registered_frames_sample_every_other_frame(spark):
+    """x_multimodal_frames samples every_n=2 over three-frame clips:
+    exactly frames 0 and 2 per doc."""
+    from hive_scripts_spark.plans.registry import QUERIES
+
+    rows = QUERIES["x_multimodal_frames"](spark, "/root/testdata/sf0.01").collect()
+    assert {r["frame_index"] for r in rows} == {0, 2}
+
+
+def test_png_plan_literals():
+    """The PNG plan literals are exactly this test encoder's output for
+    constant index-k images over _PNG_PALETTE — re-derived, so an edit
+    to either side fails."""
+    import numpy as np
+
+    from hive_scripts_spark.plans.extension_queries import (
+        _PNG_CONST_HEX,
+        _PNG_PALETTE,
+    )
+
+    for k, want in _PNG_CONST_HEX.items():
+        idx = np.full((8, 8), k, np.uint8)
+        got = _png(idx, color_type=3, bitd=2, palette=list(_PNG_PALETTE))
+        assert got.hex() == want, k
+
+
+def test_gif_plan_literals():
+    """The GIF plan literals are exactly this test encoder's output for
+    constant index-k images over _GIF_PALETTE — re-derived, so an edit
+    to either side fails."""
+    import numpy as np
+
+    from hive_scripts_spark.plans.extension_queries import (
+        _GIF_CONST_HEX,
+        _GIF_PALETTE,
+    )
+
+    for k, want in _GIF_CONST_HEX.items():
+        idx = np.full((8, 8), k, np.uint8)
+        got = _gif(idx, list(_GIF_PALETTE))
+        assert got.hex() == want, k

@@ -426,21 +426,16 @@ def test_persisted_index_search_matches_recompute(spark):
     """Build-once/search-many parity: the stored-code search faces
     (x_ann_*_index_search) must return EXACTLY the recompute forms'
     rows — the index on disk is an implementation detail, not a
-    semantic change (both share one oracle for the same reason).
-    x_ann_pq_index_search retired from the registry in the r14 swap
-    but keeps its function (value-pinned in test_retired_queries.py),
-    so resolve by module attribute, not QUERIES."""
-    from hive_scripts_spark.plans import extension_queries as E
+    semantic change (both share one oracle for the same reason)."""
+    from hive_scripts_spark.plans.registry import QUERIES
 
     sf = "/root/testdata/sf0.001"
     for stored_q, recompute_q in (
         ("x_ann_pq_index_search", "x_ann_pq_topk"),
         ("x_ann_ivfpq_index_search", "x_ann_ivfpq_topk"),
     ):
-        stored = sorted(map(tuple, getattr(E, stored_q)(spark, sf).collect()))
-        recomputed = sorted(
-            map(tuple, getattr(E, recompute_q)(spark, sf).collect())
-        )
+        stored = sorted(map(tuple, QUERIES[stored_q](spark, sf).collect()))
+        recomputed = sorted(map(tuple, QUERIES[recompute_q](spark, sf).collect()))
         assert stored == recomputed, stored_q
 
 
@@ -913,3 +908,108 @@ def test_zero_norm_never_ranks_first(spark):
     cents = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
     ivf = {r["neighbor_id"]: r for r in S.ivf_topk(emb, cents, queries, k=3, nprobe=2).collect()}
     assert ivf[2]["cosine_sim"] == 0.0
+
+
+def test_registered_balanced_sample_cap_bites(spark):
+    """x_cluster_balanced_sample's cap 40 is below every cell's
+    population at sf0.01, so the cut really fires."""
+    from hive_scripts_spark.plans.registry import QUERIES
+
+    rows = QUERIES["x_cluster_balanced_sample"](
+        spark, "/root/testdata/sf0.01"
+    ).collect()
+    assert rows and all(r["pick_order"] <= 40 for r in rows)
+
+
+@pytest.mark.parametrize(
+    "sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+)
+def test_embedding_planted_margins(sf_dir):
+    """The two data properties x_embed_near_dup_planted's closed form
+    leans on, pinned with margin on the DuckDB side so the pin is
+    engine-independent:
+
+    1. no base row sits near the 2% energy boundary (the strict `>`
+       cannot flip between engines on a rounding ulp);
+    2. the max cross-base cosine among planted copies stays < 0.9, far
+       below the 0.99 threshold, so cross pairs never enter the output
+       whatever the banding does.
+    """
+    import duckdb
+
+    from hive_scripts_spark.plans.extension_queries import _PLANTED_ENERGY_CUT
+
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "create view embeddings as select * from "
+            f"'{sf_dir}/embeddings.parquet'"
+        )
+        boundary = con.sql(
+            f"""
+            with m as (
+              select list_dot_product(cast(embedding as double[]),
+                                      cast(embedding as double[])) as n2,
+                     cast(embedding[1] as double) as v0
+              from embeddings
+            )
+            select min(abs(v0 * v0 / n2 - {_PLANTED_ENERGY_CUT})) from m
+            where n2 > 0
+            """
+        ).fetchone()[0]
+        assert boundary > 1e-9, f"energy-cut boundary margin: {boundary}"
+        max_cross = con.sql(
+            f"""
+            with m as (
+              select vec_id, cast(embedding as double[]) as vec,
+                     list_dot_product(cast(embedding as double[]),
+                                      cast(embedding as double[])) as n2,
+                     cast(embedding[1] as double) as v0
+              from embeddings
+            ), kept as (
+              select * from m
+              where n2 > 0 and v0 * v0 > {_PLANTED_ENERGY_CUT} * n2
+            ), copies as (
+              select vec_id * 3 + c as cid, vec_id as base,
+                     case when c < 2 then vec
+                          else list_transform(
+                            vec,
+                            (x, i) -> case when i = 1 then -x else x end)
+                     end as vec
+              from kept, (select unnest([0, 1, 2]) as c)
+            )
+            select max(
+              list_dot_product(a.vec, b.vec)
+              / (sqrt(list_dot_product(a.vec, a.vec))
+                 * sqrt(list_dot_product(b.vec, b.vec))))
+            from copies a join copies b
+              on a.base < b.base
+            """
+        ).fetchone()[0]
+        assert max_cross < 0.9, f"max cross-base cosine: {max_cross}"
+    finally:
+        con.close()
+
+
+def test_embedding_planted_arms_fire(spark):
+    """x_embed_near_dup_planted at sf0.01: every kept base contributes
+    exactly its copy pair at cosine 1.0, and the verify-kill arm is
+    exercised — at a threshold below the flip bound the same corpus
+    yields strictly more pairs (the flip/cross candidates the 0.99 run
+    verified away)."""
+    from hive_scripts_spark.plans.extension_queries import (
+        planted_embedding_copies,
+    )
+    from hive_scripts_spark.plans.registry import QUERIES, table
+
+    sf_dir = "/root/testdata/sf0.01"
+    rows = QUERIES["x_embed_near_dup_planted"](spark, sf_dir).collect()
+    got = {(r["a_id"], r["b_id"]): r["cosine_sim"] for r in rows}
+    assert len(got) > 0
+    assert all(v == 1.0 for v in got.values())
+    assert all(b == a + 1 and a % 3 == 0 for a, b in got)
+    copies = planted_embedding_copies(table(spark, sf_dir, "embeddings"))
+    n_loose = S.embedding_near_dup_pairs(
+        copies, threshold=0.5, use_lsh=True
+    ).count()
+    assert n_loose > len(got), (n_loose, len(got))

@@ -737,3 +737,28 @@ def test_html_to_text_unrelated_case_duplicate_allowed(spark):
     df = base.withColumnRenamed("other", "EXTRA")
     row = X.html_to_text(df).collect()[0]
     assert (row["doc_id"], row["text"]) == (1, "hi")
+
+
+@pytest.mark.parametrize(
+    "sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+)
+def test_rolling_planted_margin(sf_dir):
+    """x_doc_rolling_hash_planted's md5-join closed form leans on one
+    data property: no two distinct docs share identical NORMALIZED text
+    (else their cross pairs would join the output)."""
+    import duckdb
+
+    from hive_scripts_spark.plans.extension_queries import _NORM
+
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "create view documents as select * from "
+            f"'{sf_dir}/documents.parquet'"
+        )
+        n, d = con.sql(
+            f"select count(*), count(distinct md5({_NORM})) from documents"
+        ).fetchone()
+        assert n == d, f"{n - d} duplicate normalized texts"
+    finally:
+        con.close()

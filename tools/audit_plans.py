@@ -16,8 +16,6 @@ AUDITED = [
     "j2_count_reconcile",
     "a3_table_fingerprint",
     "a4_deterministic_sample",
-    # a4_stratified_sample retired from the registry (r14 swap); the
-    # same hash-mod filter shape audits via a4_deterministic_sample
     "q1_pricing_summary",
     "q2_revenue_by_nation",
     "g_q6_forecast_revenue",
@@ -34,17 +32,11 @@ AUDITED = [
     "x_ann_brute_topk",
     "x_events_hourly",
     "x_dedup_minhash_lsh",
-    # x_curation_pipeline retired from the registry (r10 swap);
-    # x_curation_full audits the same stages plus the decon gates
     "x_curation_full",
     "x_decontaminate",
     "x_text_repetition",
     "x_token_budget_pack",
-    # x_multimodal_decode_meta retired from the registry (r16 swap);
-    # the same mapInPandas decode plan shape audits via the real twin
     "x_multimodal_decode_real",
-    # x_ann_ivf_assign retired from the registry (r15 swap); its
-    # assignment step rides inside x_ann_ivf_topk below
     "x_ann_ivf_topk",
     "x_dedup_components",
     "x_group_cap",

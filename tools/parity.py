@@ -43,6 +43,46 @@ def frame_digest(cols: list[str], rows: list[tuple]) -> str:
     return hashlib.md5("\n".join(lines).encode()).hexdigest()
 
 
+def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"create view {t} as select * from read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def spark_frame(spark, fn, sf_dir: str) -> tuple[list[str], list[tuple]]:
+    sdf = fn(spark, sf_dir)
+    return sdf.columns, [tuple(r) for r in sdf.collect()]
+
+
+def duck_frame(con, oracle: str) -> tuple[list[str], list[tuple]]:
+    res = con.execute(oracle)
+    return [d[0] for d in res.description], res.fetchall()
+
+
+def differences(spark_side, duck_side) -> list[str]:
+    """THE parity comparison: row count, column names, and the
+    order-insensitive value hash. Returns the problems found (empty
+    means parity); a value mismatch also lists the first 3 differing
+    canonical rows."""
+    (scols, srows), (dcols, drows) = spark_side, duck_side
+    problems = []
+    if len(srows) != len(drows):
+        problems.append(f"rows {len(srows)} vs {len(drows)}")
+    if sorted(scols) != sorted(dcols):
+        problems.append(f"cols {sorted(scols)} vs {sorted(dcols)}")
+    elif frame_digest(scols, srows) != frame_digest(dcols, drows):
+        problems.append("value-hash mismatch")
+        so = sorted("\x01".join(_norm_value(v) for v in r) for r in srows)
+        do = sorted("\x01".join(_norm_value(v) for v in r) for r in drows)
+        diff = [(a, b) for a, b in zip(so, do) if a != b][:3]
+        problems += [f"spark: {a!r} / duck: {b!r}" for a, b in diff]
+    return problems
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -75,11 +115,7 @@ def main() -> int:
         # by construction, not by threshold.)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"create view {t} as select * from read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_connect(sf_dir)
 
     queries, oracles = e.queries(), e.oracle_sql()
     failures = []
@@ -87,46 +123,26 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            spark_side = spark_frame(spark, fn, sf_dir)
         except Exception as ex:  # noqa: BLE001
             failures.append(name)
             print(f"FAIL  {name}: spark error: {type(ex).__name__}: {ex}")
             continue
         if name not in oracles:
-            print(f"ok?   {name}: rows-only ({len(srows)} rows) — no oracle")
+            print(f"ok?   {name}: rows-only ({len(spark_side[1])} rows) — no oracle")
             continue
         try:
-            res = con.execute(oracles[name])
-            dcols = [d[0] for d in res.description]
-            drows = res.fetchall()
+            duck_side = duck_frame(con, oracles[name])
         except Exception as ex:  # noqa: BLE001
             failures.append(name)
             print(f"FAIL  {name}: duckdb error: {type(ex).__name__}: {ex}")
             continue
-        problems = []
-        if len(srows) != len(drows):
-            problems.append(f"rows {len(srows)} vs {len(drows)}")
-        if sorted(scols) != sorted(dcols):
-            problems.append(f"cols {sorted(scols)} vs {sorted(dcols)}")
-        elif frame_digest(scols, srows) != frame_digest(dcols, drows):
-            problems.append("value-hash mismatch")
+        problems = differences(spark_side, duck_side)
         if problems:
             failures.append(name)
-            print(f"FAIL  {name}: {'; '.join(problems)}")
-            if "value-hash mismatch" in problems and srows and drows:
-                so = sorted(
-                    ["\x01".join(_norm_value(v) for v in r) for r in srows]
-                )
-                do = sorted(
-                    ["\x01".join(_norm_value(v) for v in r) for r in drows]
-                )
-                diff = [(a, b) for a, b in zip(so, do) if a != b][:3]
-                for a, b in diff:
-                    print(f"      spark: {a!r}\n      duck:  {b!r}")
+            print(f"FAIL  {name}: " + "\n      ".join(problems))
         else:
-            print(f"PASS  {name} ({len(srows)} rows)")
+            print(f"PASS  {name} ({len(spark_side[1])} rows)")
     spark.stop()
     print(f"\n{len(failures)} failures" if failures else "\nall green")
     return 1 if failures else 0

@@ -69,9 +69,8 @@ TOP10 = [
     "x_events_sliding",
 ]
 
-#: the rows the r18 capacity swap registered — new enough that their
-#: scale posture has no committed evidence yet, so the series carries
-#: them alongside the sweep top-10
+#: rows outside the sweep top-10 whose scale posture the series also
+#: records
 NEW_R18 = ["x_digit_hist", "x_digit_quantiles", "x_robots_decisions"]
 
 _CLK_TCK = float(os.sysconf("SC_CLK_TCK")) if hasattr(os, "sysconf") else 100.0
@@ -88,8 +87,8 @@ def _steal_ticks() -> int:
 
 def _shuffle_totals(spark):
     """Cumulative (write, read) shuffle bytes across completed stages
-    (same AppStatusStore source as scale_probe.py — plan SQLMetrics
-    read zero under AQE stage reuse)."""
+    from the AppStatusStore (plan SQLMetrics read zero under AQE stage
+    reuse)."""
     store = spark.sparkContext._jsc.sc().statusStore()
     empty = spark.sparkContext._jvm.java.util.ArrayList()
     ds = [getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)]
