@@ -4743,25 +4743,29 @@ def x_countmin_heavy(spark, sf_dir):
 # cumulative-bucket quantile picks) and the RFC 9309 robots decision fold
 # ---------------------------------------------------------------------------
 
-#: DuckDB twin of sketches._digit_parts at digits=2, scale=6: the
-#: stripped significant-digit string of |v| * 10^6. Every bucket is
-#: exact integer/decimal/string arithmetic (NO ``log()`` — cross-engine
-#: libm log is not correctly rounded, so a log-bucketed DDSketch could
-#: flip bucket indexes between engines; the digit-string form cannot).
-_DIGIT_BUCKETS = """
+# DuckDB twin of sketches._digit_parts at digits=2, scale=6: the
+# stripped significant-digit string of |v| * 10^6. Every bucket is
+# exact integer/decimal/string arithmetic (NO ``log()`` — cross-engine
+# libm log is not correctly rounded, so a log-bucketed DDSketch could
+# flip bucket indexes between engines; the digit-string form cannot).
+def _digit_buckets(group: str = "") -> str:
+    """CTE chain ending in ``b``: one (sign, decade, sub) bucket per
+    o_totalprice row, carrying the ``group`` column when one is given."""
+    g = f"{group}, " if group else ""
+    return f"""
     with vals as (
-      select cast(o_totalprice as decimal(38,6)) as vd
+      select {g}cast(o_totalprice as decimal(38,6)) as vd
       from orders
       where o_totalprice is not null
         and isfinite(o_totalprice) and abs(o_totalprice) < 1e31
     ), parts as (
-      select vd,
+      select {g}vd,
              regexp_replace(
                regexp_replace(cast(abs(vd) as varchar), '[.]', ''),
                '^0+', '') as stripped
       from vals
     ), b as (
-      select cast(case when vd < 0 then -1 when vd > 0 then 1
+      select {g}cast(case when vd < 0 then -1 when vd > 0 then 1
                        else 0 end as int) as sign,
              cast(length(stripped) as int) as decade,
              cast(case when length(stripped) = 0 then 0
@@ -4770,6 +4774,9 @@ _DIGIT_BUCKETS = """
       from parts
     )
 """
+
+
+_DIGIT_BUCKETS = _digit_buckets()
 
 
 @register(
@@ -5064,36 +5071,10 @@ def x_zorder_key(spark, sf_dir):
     )
 
 
-_GROUPED_DIGIT_BUCKETS = """
-    with vals as (
-      select o_orderpriority,
-             cast(o_totalprice as decimal(38,6)) as vd
-      from orders
-      where o_totalprice is not null
-        and isfinite(o_totalprice) and abs(o_totalprice) < 1e31
-    ), parts as (
-      select o_orderpriority, vd,
-             regexp_replace(
-               regexp_replace(cast(abs(vd) as varchar), '[.]', ''),
-               '^0+', '') as stripped
-      from vals
-    ), b as (
-      select o_orderpriority,
-             cast(case when vd < 0 then -1 when vd > 0 then 1
-                       else 0 end as int) as sign,
-             cast(length(stripped) as int) as decade,
-             cast(case when length(stripped) = 0 then 0
-                  else cast(rpad(substr(stripped, 1, 2), 2, '0') as int)
-                  end as int) as sub
-      from parts
-    )
-"""
-
-
 @register(
     "x_digit_quantiles_grouped",
     oracle=(
-        _GROUPED_DIGIT_BUCKETS
+        _digit_buckets("o_orderpriority")
         + """
     , h as (
       select o_orderpriority, sign, decade, sub,

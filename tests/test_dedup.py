@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hive_scripts_spark.operators import dedup as D
+from hive_scripts_spark.plans.extension_queries import _NORM
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat sleeps "
@@ -946,12 +947,9 @@ def test_minhash_index_interoperates_with_inline_chain(spark, tmp_path):
 
 #: engine-faithful shingle sets (word 3-grams over the normalized token
 #: stream, distinct, sorted for set comparison) for the planted pins
-_PLANTED_SETS = r"""
+_PLANTED_SETS = f"""
     with toks as (
-      select doc_id,
-             string_split(trim(regexp_replace(regexp_replace(
-               text, chr(13), '', 'g'), '\s+', ' ', 'g')), ' ') as ws
-      from documents
+      select doc_id, string_split({_NORM}, ' ') as ws from documents
     ), sets as (
       select doc_id, list_sort(list_distinct([
                ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
