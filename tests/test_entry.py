@@ -61,21 +61,17 @@ def test_registry_order_ignores_files_beside_the_package(tmp_path):
     from hive_scripts_spark.plans.registry import ORACLES
 
     pkg = Path(__file__).resolve().parents[1] / "hive_scripts_spark"
-    roots = []
-    for sub in ("plain", "planted"):
-        root = tmp_path / sub
-        shutil.copytree(
-            pkg,
-            root / "hive_scripts_spark",
-            ignore=shutil.ignore_patterns("__pycache__"),
-        )
-        roots.append(root)
+    shutil.copytree(
+        pkg,
+        tmp_path / "hive_scripts_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    plain = _registry_order(tmp_path)
     green = {"rows_match": True, "schema_match": True, "hash_match": True}
-    (roots[1] / "CORRECTNESS_r99.json").write_text(
+    (tmp_path / "CORRECTNESS_r99.json").write_text(
         json.dumps({n: green for n in list(ORACLES)[:-1]})
     )
-    plain = _registry_order(roots[0])
-    assert _registry_order(roots[1]) == plain
+    assert _registry_order(tmp_path) == plain
     assert set(plain) == set(entry_mod.queries())
 
 
